@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** Between-query session cleanup shared by the harness mains (Bench,
-  * Verify, TimeQ, PlanDigest).
+  * Verify, TimeQ, HostFactor, PlanDigest, ShuffleAudit, PqTune).
   *
   * `spark.catalog.clearCache()` drops only the SQL relation cache —
   * localCheckpoint blocks from iterative operators (PageRank,

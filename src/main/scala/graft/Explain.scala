@@ -1,29 +1,19 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Plan-inspection main: prints `explain(formatted)` for selected queries
   * (all of them with no args). Used to keep the physical plans honest —
   * pushed filters, pruned ReadSchema, broadcast joins on dims,
   * partial+final HashAggregate, WholeStageCodegen spans.
   *
-  * Usage: runMain graft.Explain [queryName ...]
+  * Usage: runMain graft.Explain [query...] — names or substrings.
   */
 object Explain {
   def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", 4)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    val names = if (args.nonEmpty) args.toSeq else SparkEntry.queries.keys.toSeq.sorted
-    names.foreach { name =>
+    val sfDir = Harness.sfDir("/root/testdata/sf0.01")
+    val spark = Harness.session("4")
+    Harness.select(args.toSeq).foreach { case (name, fn) =>
       println(s"\n========== $name ==========")
-      try SparkEntry.queries(name)(spark, sfDir).explain("formatted")
+      try fn(spark, sfDir).explain("formatted")
       catch { case e: Throwable => println(s"explain failed: ${e.getMessage}") }
     }
     spark.stop()

@@ -1,13 +1,14 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import Harness.{fmt, json}
 
 /** Host-state adjudication probe (VERDICT r15 #1): re-runs five pinned
   * cheap queries under the exact Bench session/protocol and emits ONE
   * JSON line whose `value` is the median ratio of measured warm time to
   * a committed healthy-host reference. A factor ~1.0 certifies the host
   * is at the anchor state; a uniformly elevated factor quantifies the
-  * co-tenant drift TIMEQ_r14/r15 adjudicated by hand (monotone
-  * within-session stamp curves, 138.5 → 203.6 s warm on identical code).
+  * co-tenant drift the round-14/15 timing notes (commits bc4ac1a and
+  * 0651ae5) adjudicated by hand (monotone within-session stamp curves,
+  * 138.5 → 203.6 s warm on identical code).
   *
   * Protocol determinism: a FRESH JVM runs the same four Bench warm-up
   * queries, then each pinned query three times in a fixed order — so
@@ -21,9 +22,9 @@ import org.apache.spark.sql.SparkSession
   *
   * `refs` were measured at the round-16 healthy anchor (load 0.05,
   * zero CPU steal over the probe window, idle driver host) — the state
-  * TIMEQ_r15.md's stamp-1 capability anchor calls healthy. Re-baking
-  * them requires a committed TIMEQ note (they are the denominator of
-  * every future adjudication).
+  * the round-15 timing note's (commit 0651ae5) stamp-1 capability
+  * anchor calls healthy. Re-baking them requires a committed timing note
+  * (they are the denominator of every future adjudication).
   *
   * Usage: `sbt "runMain graft.HostFactor"` — writes the JSON line to
   * stdout and to SPARK_GRAFT_HOSTFACTOR_OUT (default untracked
@@ -47,34 +48,15 @@ object HostFactor {
     "q_evt_tumbling_hourly" -> 0.320,
     "q_sim_cosine_topk"     -> 0.526)
 
-  private def fmt(v: Double): String =
-    String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
-
   def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // identical warm-up to Bench: one cheap query per base table
-    Seq("q_agg_pricing_summary", "q_agg_distinct_daily",
-        "q_text_quality", "q_sim_cosine_topk").foreach { q =>
-      SparkEntry.queries.get(q).foreach { fn =>
-        try fn(spark, sfDir).count() catch { case _: Throwable => () }
-      }
-    }
+    val sfDir = Harness.sfDir("/root/testdata/sf0.1")
+    val spark = Harness.session(Harness.cpus("32"))
+    Harness.warmUp(spark, sfDir) // identical warm-up to Bench
     val measured = pinned.map { case (name, ref) =>
       val fn = SparkEntry.queries(name)
       val times = (1 to 3).map { _ =>
-        val t0 = System.nanoTime()
-        fn(spark, sfDir).count()
-        (System.nanoTime() - t0) / 1e9
+        Harness.timed(spark, name, fn, sfDir)
+          .fold(m => sys.error(s"[hostfactor] $name failed: $m"), _.seconds)
       }
       Blocks.dropAll(spark)
       (name, ref, math.min(times(1), times(2)))
@@ -84,19 +66,16 @@ object HostFactor {
     val factor =
       if (ratios.isEmpty) -1.0
       else { val s = ratios.map(_._2).sorted; s(s.length / 2) } // median of 5
-    val qs = measured.map { case (n, _, w) => "\"" + n + "\":" + fmt(w) }
+    val qs = measured.map { case (n, _, w) => json(n) + ":" + fmt(w) }
       .mkString("{", ",", "}")
-    val rs = ratios.map { case (n, r) => "\"" + n + "\":" + fmt(r) }
+    val rs = ratios.map { case (n, r) => json(n) + ":" + fmt(r) }
       .mkString("{", ",", "}")
-    val refs = measured.map { case (n, ref, _) => "\"" + n + "\":" + fmt(ref) }
+    val refs = measured.map { case (n, ref, _) => json(n) + ":" + fmt(ref) }
       .mkString("{", ",", "}")
     val line = s"""{"metric":"host_factor","value":${fmt(factor)},"stat":"min(run2,run3) per query, median ratio across queries; ~1.0 = the committed healthy anchor, >1 = uniform host drift","queries":$qs,"ratios":$rs,"refs":$refs,"sf":"$sfDir"}"""
     val outPath = sys.env.getOrElse("SPARK_GRAFT_HOSTFACTOR_OUT",
       "/root/repo/HOSTFACTOR.json")
-    try java.nio.file.Files.write(java.nio.file.Paths.get(outPath),
-      (line + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    catch { case e: Throwable =>
-      System.err.println(s"[hostfactor] could not write $outPath: $e") }
+    Harness.writeLine(outPath, line, "hostfactor")
     println(line)
   }
 }

@@ -1,95 +1,29 @@
 package graft
-
-import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
-import org.apache.spark.sql.SparkSession
-import java.util.concurrent.atomic.AtomicLong
+import Harness.mb
 
 /** Per-query shuffle/spill/input BYTE accounting — the instrument that
   * answers "is there a shuffle here that becomes the bottleneck at
   * 100 TB" with measured bytes instead of plan-shape inference
   * (PlanDigest counts exchanges; this weighs them).
   *
-  * `runMain graft.ShuffleAudit OUT.json [query...]` — runs each named
-  * query (default: every SparkEntry query) once against
-  * SPARK_GRAFT_SF_DIR and writes one JSON object per query:
-  * shuffle_read_mb / shuffle_write_mb / spilled_mb / input_mb.
-  *
-  * Metrics come from the PUBLIC listener surface (onTaskEnd
-  * taskMetrics); listener delivery is async, so each query's reading
-  * polls until the counters go quiet instead of racing the bus.
+  * `runMain graft.ShuffleAudit OUT.json [query...]` — runs each selected
+  * query (names or substrings; default: every SparkEntry query) once
+  * against SPARK_GRAFT_SF_DIR and writes one JSON object per query:
+  * shuffle_read_mb / shuffle_write_mb / spilled_mb / input_mb, read
+  * from `Harness.profiled`.
   */
 object ShuffleAudit {
-
-  private class Acc extends SparkListener {
-    val read = new AtomicLong
-    val write = new AtomicLong
-    val spill = new AtomicLong
-    val input = new AtomicLong
-    override def onTaskEnd(t: SparkListenerTaskEnd): Unit = {
-      val m = t.taskMetrics
-      if (m != null) {
-        read.addAndGet(m.shuffleReadMetrics.totalBytesRead)
-        write.addAndGet(m.shuffleWriteMetrics.bytesWritten)
-        spill.addAndGet(m.diskBytesSpilled + m.memoryBytesSpilled)
-        input.addAndGet(m.inputMetrics.bytesRead)
-      }
-    }
-    def snap: (Long, Long, Long, Long) =
-      (read.get, write.get, spill.get, input.get)
-    /** Poll until the async listener bus goes quiet (two identical
-      * reads 100 ms apart), then return the counters. */
-    def settled(): (Long, Long, Long, Long) = {
-      var prev = snap
-      var tries = 0
-      while (tries < 100) {
-        Thread.sleep(100)
-        val cur = snap
-        if (cur == prev) return cur
-        prev = cur
-        tries += 1
-      }
-      prev
-    }
-  }
-
-  /** Run `fn` under a fresh listener; returns its settled byte deltas. */
-  def measure(spark: SparkSession)(fn: => Unit): (Long, Long, Long, Long) = {
-    val acc = new Acc
-    spark.sparkContext.addSparkListener(acc)
-    try { fn; acc.settled() }
-    finally spark.sparkContext.removeSparkListener(acc)
-  }
-
   def main(args: Array[String]): Unit = {
     val out = args.headOption.getOrElse("SHUFFLE_AUDIT.json")
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    val names =
-      if (args.length > 1) args.drop(1).toSeq
-      else SparkEntry.queries.keys.toSeq.sorted
-    def mb(b: Long): String =
-      String.format(java.util.Locale.ROOT, "%.2f", Double.box(b / 1048576.0))
-    val lines = names.flatMap { name =>
-      SparkEntry.queries.get(name) match {
-        case None => println(s"[shuffleaudit] unknown query: $name"); None
-        case Some(fn) =>
-          val r = try {
-            val (sr, sw, sp, in) = measure(spark)(fn(spark, sfDir).count())
-            s""""$name": {"shuffle_read_mb":${mb(sr)},"shuffle_write_mb":${mb(sw)},"spilled_mb":${mb(sp)},"input_mb":${mb(in)}}"""
-          } catch {
-            case e: Exception => s""""$name": {"err":"${e.getClass.getSimpleName}"}"""
-          }
-          Blocks.dropAll(spark)
-          Some(r)
+    val sfDir = Harness.sfDir("/root/testdata/sf0.1")
+    val spark = Harness.session(Harness.cpus("32"))
+    val lines = Harness.select(args.toSeq.drop(1)).map { case (name, fn) =>
+      val (r, p) = Harness.profiled(spark)(Harness.timed(spark, name, fn, sfDir))
+      Blocks.dropAll(spark)
+      r match {
+        case Right(_) =>
+          s""""$name": {"shuffle_read_mb":${mb(p.shuffleReadBytes)},"shuffle_write_mb":${mb(p.shuffleWriteBytes)},"spilled_mb":${mb(p.spillBytes)},"input_mb":${mb(p.inputBytes)}}"""
+        case Left(m) => s""""$name": {"err":${Harness.json(m)}}"""
       }
     }
     val json = lines.mkString("{\n  ", ",\n  ", "\n}\n")

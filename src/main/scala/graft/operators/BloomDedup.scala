@@ -64,7 +64,6 @@ object BloomDedup {
     * 64 KiB at m = 2^19; at scale it rides a broadcast either way).
     */
   def build(df: DataFrame, keyCol: Column, numBits: Int, numHashes: Int): Array[Long] = {
-    import df.sparkSession.implicits._
     val agg = udaf(new BloomAggregator(numBits, numHashes))
     val rows = df.select(agg(keyCol).as("bloom")).collect()
     if (rows.isEmpty || rows(0).isNullAt(0)) new Array[Long](numBits / 64)

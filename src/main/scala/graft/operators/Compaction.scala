@@ -2,7 +2,6 @@ package graft.operators
 
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.functions._
 
 /** Small-file compaction — the OPTIMIZE-style operational pass every
   * long-lived table needs: streaming sinks, per-batch upserts and

@@ -43,8 +43,6 @@ object MediaContainers {
   // mp4 / ISO base media file format (ISO 14496-12): size+fourcc boxes
   // ------------------------------------------------------------------
 
-  private def be16(b: Array[Byte], o: Int): Int =
-    ((b(o) & 0xff) << 8) | (b(o + 1) & 0xff)
   private def be32(b: Array[Byte], o: Int): Long =
     ((b(o) & 0xffL) << 24) | ((b(o + 1) & 0xffL) << 16) |
       ((b(o + 2) & 0xffL) << 8) | (b(o + 3) & 0xffL)

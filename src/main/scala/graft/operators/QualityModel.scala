@@ -94,7 +94,6 @@ object QualityModel {
     // lr 10 → 0.874 accuracy; lr ≥ 50 oscillates — the bias gradient is
     // O(1) so large steps saturate every sigmoid and training flatlines
     // at the majority class. Keep lr ≤ ~20 for rel-freq features.
-    val spark = docs.sparkSession
     val keep = pmod(xxhash64(col("doc_id")), lit(1000000L)) <
       lit(math.round(sampleFraction * 1e6))
     val (d, l) =

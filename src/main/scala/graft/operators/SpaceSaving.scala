@@ -76,7 +76,6 @@ object SpaceSaving {
     * summaries merge map-side), exploded to scalar rows.
     */
   def topK(df: DataFrame, keyCol: String, m: Int = 64, k: Int = 10): DataFrame = {
-    import df.sparkSession.implicits._
     val agg = udaf(new SpaceSaving(m))
     df.select(col(keyCol).cast("long").as("item"))
       .agg(agg(col("item")).as("summary"))

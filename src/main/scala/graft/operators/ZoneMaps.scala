@@ -93,7 +93,6 @@ object ZoneMaps {
     if (files.isEmpty) // degenerate: empty snapshot → empty map
       return prev.map(_.limit(0)).getOrElse(
         build(spark, dir, cols).limit(0))
-    val fileSet = files.toSet
     val carried = prev.map(_.filter(col("file").isin(files: _*)))
     val newFiles = carried match {
       case None => files

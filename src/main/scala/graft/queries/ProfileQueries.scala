@@ -1,7 +1,6 @@
 package graft.queries
 
 import graft.{QueryPack, Tables}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Dataset profiling — the ANALYZE-style passes an engine (and its

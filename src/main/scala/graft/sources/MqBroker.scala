@@ -200,7 +200,7 @@ final class MqBroker private (val dir: String, serverSocket: ServerSocket) {
     }
   }
 
-  private val acceptThread = {
+  locally {
     val t = new Thread(() => {
       while (!closed) {
         try {
@@ -215,7 +215,6 @@ final class MqBroker private (val dir: String, serverSocket: ServerSocket) {
     }, s"mq-broker-accept-$port")
     t.setDaemon(true)
     t.start()
-    t
   }
 
   def close(): Unit = {

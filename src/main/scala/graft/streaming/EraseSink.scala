@@ -1,7 +1,7 @@
 package graft.streaming
 
 import graft.operators.{AnnIndexStore, DedupStore, InvertedIndex, MergeInto}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.streaming.StreamingQuery
 

@@ -23,7 +23,6 @@ class AqeSkewSpec extends SparkSpec {
   }
 
   test("AQE splits a skewed sort-merge join; result matches broadcast plan") {
-    import spark.implicits._
     // 100k rows on one hot key + a spread tail, joined to a 100-key dim.
     // The payload is an incompressible hash that the aggregate keeps
     // alive: partition skew is judged on COMPRESSED shuffle bytes, and a

@@ -47,11 +47,11 @@ class BloomJoinSpec extends SparkSpec {
 
   test("measured: the reduction deletes most of the fact side's shuffle bytes") {
     def run(pre: org.apache.spark.sql.DataFrame): Long = {
-      val (_, write, _, _) = ShuffleAudit.measure(spark) {
+      val (_, p) = Harness.profiled(spark) {
         pre.hint("shuffle_hash").join(dim, Seq("c_custkey"))
           .groupBy("c_custkey").agg(count(lit(1))).collect()
       }
-      write
+      p.shuffleWriteBytes
     }
     val plainBytes = run(fact)
     val bloomBytes =

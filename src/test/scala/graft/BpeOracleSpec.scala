@@ -48,7 +48,7 @@ class BpeOracleSpec extends SparkSpec {
            |SELECT m.rank AS rank, m.l AS l, m.r AS r, m.c AS c
            |FROM (SELECT unnest(ml) AS m FROM mfinal)
            |ORDER BY rank""".stripMargin
-      val sqlFile = java.nio.file.Files.write(
+      java.nio.file.Files.write(
         java.nio.file.Paths.get(s"$dir/oracle.sql"), sql.getBytes("UTF-8"))
       val py =
         s"""import duckdb

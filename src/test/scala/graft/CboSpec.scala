@@ -2,7 +2,7 @@ package graft
 
 import graft.operators.Analyze
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.catalyst.plans.logical.{Join, LogicalPlan}
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.functions._
 
 /** ANALYZE → catalog → CostBasedJoinReorder (operators.Analyze): with

@@ -1,7 +1,6 @@
 package graft
 
 import graft.operators._
-import graft.streaming.StreamOps
 import org.apache.spark.sql.functions._
 
 /** Zero-row and degenerate inputs must produce empty results, never

@@ -205,7 +205,6 @@ class GraphBpeSpec extends SparkSpec {
   }
 
   test("bpe counts pack: bins follow the exact prefix-sum over encoded token counts") {
-    import spark.implicits._
     val docs = Tables.t(spark, sfDir, "documents").filter(col("doc_id") < 50)
     val merges = BpeTrainer.train(docs, numMerges = 16)
     val counts = BpeTrainer.encode(docs, merges, BpeTrainer.alphabet(docs))

@@ -50,7 +50,6 @@ class InvertedIndexSpec extends SparkSpec {
   }
 
   test("append: search-after-append == full rebuild; old postings untouched") {
-    import spark.implicits._
     val docs = Tables.t(spark, sfDir, "documents")
     val old = docs.filter(col("doc_id") % 2 === 0)
     val fresh = docs.filter(col("doc_id") % 2 === 1)
@@ -269,7 +268,6 @@ class InvertedIndexSpec extends SparkSpec {
   }
 
   test("append crash window: data renamed, manifest not committed — replay commits it") {
-    import spark.implicits._
     val docs = Tables.t(spark, sfDir, "documents")
     val dir = java.nio.file.Files.createTempDirectory("graft_idxcw").toString
     try {
@@ -301,7 +299,6 @@ class InvertedIndexSpec extends SparkSpec {
   }
 
   test("rebuild never claims a crashed append's segment name; the replayed batch survives") {
-    import spark.implicits._
     val docs = Tables.t(spark, sfDir, "documents")
     val old = docs.filter(col("doc_id") % 2 === 0)
     val fresh = docs.filter(col("doc_id") % 2 === 1)
@@ -375,7 +372,6 @@ class InvertedIndexSpec extends SparkSpec {
   }
 
   test("tiered compaction: smallest segments fold; the largest segment's files are not rewritten") {
-    import spark.implicits._
     val docs = Tables.t(spark, sfDir, "documents")
     val dir = java.nio.file.Files.createTempDirectory("graft_idxtier").toString
     try {
@@ -423,7 +419,6 @@ class InvertedIndexSpec extends SparkSpec {
   }
 
   test("bm25: hand-checked scores; persisted retrieval == in-memory formula") {
-    import spark.implicits._
     // hand corpus, query {a, b}: N=4, dl = (6,3,3,2), df(a)=4, df(b)=3
     val idx = InvertedIndex.build(handCorpus)
     def stats(ix: org.apache.spark.sql.DataFrame) =
@@ -470,7 +465,6 @@ class InvertedIndexSpec extends SparkSpec {
   }
 
   test("docLengths/searchBm25: aux-stripped segments fall back; compaction retires the fallback FIRST") {
-    import spark.implicits._
     val docs = Tables.t(spark, sfDir, "documents")
     val dir = java.nio.file.Files.createTempDirectory("graft_idxdl").toString
     try {
@@ -533,7 +527,6 @@ class InvertedIndexSpec extends SparkSpec {
   }
 
   test("in-place rebuild: committed data survives; old version stays readable until vacuum") {
-    import spark.implicits._
     val docs = Tables.t(spark, sfDir, "documents")
     val dir = java.nio.file.Files.createTempDirectory("graft_idxrb").toString
     try {
@@ -566,7 +559,6 @@ class InvertedIndexSpec extends SparkSpec {
   }
 
   test("bounded growth: long append+compact stream keeps disk = live + retained segments") {
-    import spark.implicits._
     val docs = Tables.t(spark, sfDir, "documents")
     val dir = java.nio.file.Files.createTempDirectory("graft_idxgrow").toString
     try {

@@ -1,7 +1,6 @@
 package graft
 
 import graft.operators.{AnnIvf, SemDedup}
-import org.apache.spark.sql.functions._
 
 /** SemDeDup cluster-then-prune vs its exact all-pairs twin
   * (q_dedup_embed_cosine): precision is exactly 1 (same cosine, same

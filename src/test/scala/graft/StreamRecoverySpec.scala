@@ -1,6 +1,5 @@
 package graft
 
-import graft.streaming.StreamOps
 import org.apache.spark.sql.functions._
 import java.nio.file.Files
 

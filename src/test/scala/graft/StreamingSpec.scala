@@ -12,7 +12,6 @@ case class Ev(event_id: Long, ts: Timestamp, user_id: Long, event_type: String, 
   * micro-batches, plus watermark late-data and replay-dedup behavior.
   */
 class StreamingSpec extends SparkSpec {
-  import scala.jdk.CollectionConverters._
 
   private def ts(s: String) = Timestamp.valueOf(s)
 
@@ -224,7 +223,6 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("s_stream_session_state: session_window matches batch gap-sessionization") {
-    import spark.implicits._
     // user 1: events at 00:05, 00:45 (gap 40min > 30 ⇒ new session), 01:20
     // (gap 35min ⇒ new session); user 2: 01:10, 02:59 (new), 03:01 (same)
     val streamed = runComplete(df => StreamOps.sessionize(df), Seq(base), "sess")

@@ -1,7 +1,6 @@
 package graft
 
 import graft.streaming.StreamingTopK
-import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import java.sql.Timestamp
 

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.functions._
 
 /** graft_dot semantics: bitwise parity with the HOF formulation including
   * the NULL edge cases (mismatched lengths, null elements) — a corrupt
